@@ -25,8 +25,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from fact_extraction_spark.session import host_cpus  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(host_cpus()))
 LEG = os.environ.get("EXTRA_LEG", "dict_unanchored")  # dict | dict_unanchored
 REPEATS = int(os.environ.get("EXTRA_REPEATS", "2"))
 

@@ -37,9 +37,9 @@ def main() -> None:
         build_alias_candidates, collect_redirect_map)
     from fact_extraction_spark.plans.pipeline import (
         PipelineConfig, _build_dict_ctx, _page_mentions)
-    from fact_extraction_spark.session import get_spark
+    from fact_extraction_spark.session import get_spark, host_cpus
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", host_cpus()))
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     keep_mods = [int(m) for m in
                  os.environ.get("DICT_BENCH_KEEP_MODS", "32,8,4,2,1").split(",")]

@@ -1,27 +1,40 @@
 """Stage 2: mention detection.
 
-Two detectors share the frozen tokenizer so spans always line up:
+All detectors share the frozen tokenizer so spans always line up.
 
-* ``tag_anchor_mentions`` — reference-parity tagging: the entities a sentence
-  mentions are the targets of its hyperlink anchors, located at token level
-  (semantics of tagged_sentence.py:17-64,78-83 TokenMatcher + the
-  capitalize hotfix :232-233), resolved through the redirect dictionary at
-  match time (the reference instead rewrote the whole dump in a setup pass,
-  data_cleaning/redirects_substitutor.py:136-168 — resolving at match time
-  avoids rewriting 10^12 documents).
-* ``detect_dictionary_mentions`` — the north-star detector: one Aho-Corasick
-  automaton over the FULL alias dictionary (titles ∪ redirects), built once
-  per executor inside the pandas UDF, one O(tokens) pass per sentence.
+Anchor tagging (``tag_anchor_mentions`` and its fused page forms) is the
+reference-parity path: the entities a sentence mentions are the targets of
+its hyperlink anchors, located at token level (semantics of
+tagged_sentence.py:17-64,78-83 TokenMatcher + the capitalize hotfix
+:232-233), resolved through the redirect dictionary at match time (the
+reference instead rewrote the whole dump in a setup pass,
+data_cleaning/redirects_substitutor.py:136-168 — resolving at match time
+avoids rewriting 10^12 documents).
 
-Both emit the same shape: one row per (sentence, mention) with the token
-span and the canonical entity.
+Dictionary detection is ONE per-sentence scan kernel — ``_scan_tokens``
+over an Aho-Corasick automaton of the dictionary's hot head, set up once
+per batch by ``_scan_state`` — behind two Arrow UDFs, one per input shape:
 
-Scale notes: the alias dictionary is broadcast once (a list of
-(alias, entity) pairs); the automaton is constructed lazily per executor
-process and cached in a module global keyed by broadcast id — NOT rebuilt
-per batch. At 10^12-document scale with ~10^7 aliases the broadcast is
-O(1 GB) — the documented fallback is a map-side join against a bucketed
-alias table for the long tail, keeping the automaton to the hot head.
+* ``fused_sentence_hits_and_anchors`` — pages(html) in: stage-1 text
+  extraction, the dictionary scan and anchor tagging in one pass;
+* ``sentence_head_hits`` — pre-split sentence rows in.
+
+Both emit one row per sentence with its tokens, automaton hits and the
+candidate positions where a tail alias could start. ``_mapside_union``
+turns those rows into mention rows: hot-head hits ∪ a relational n-gram
+join against the tail alias table. The tail is described to the scan by
+two broadcast token sets (``collect_tail_broadcasts``): its first tokens
+(candidate marking and, on pages, pruning of sentences with nothing to
+emit) and one witness token per alias (the sentence-level match gate). A
+set too large to broadcast is None and switches its feature off. An EMPTY
+tail is two empty sets (``empty_tail_broadcasts``), so the full-dictionary
+"broadcast" strategy is simply the head = whole dictionary case.
+
+Scale notes: the head is broadcast once as a list of (alias, entity)
+pairs; the automaton is constructed lazily per executor process and
+cached in a module global keyed by the broadcast payload — NOT rebuilt per
+batch. The tail never reaches the driver: at warehouse scale it is a
+table bucketed by its join key.
 """
 
 from __future__ import annotations
@@ -245,6 +258,22 @@ def _skip_probe(ac: TokenAhoCorasick, ft: frozenset | None):
         lambda: build_skip_probe(_scan_skip_set(ac, ft)))
 
 
+def _scan_state(head_bc, first_tok_bc, witness_bc):
+    """(ac, skip, ft, wt, gate): the per-batch set-up both scan UDFs share.
+
+    ``first_tok_bc`` / ``witness_bc`` describe the tail (see
+    collect_tail_broadcasts); an empty tail is two empty sets. A given
+    first-token set ``ft`` turns on candidate marking in _scan_tokens (and
+    sentence pruning on the page path); a given witness set ``wt`` turns
+    on the match gate. None — the set exceeded the broadcast bound —
+    leaves its feature off, which is always exact."""
+    ac = _automaton_for(head_bc)
+    ft = first_tok_bc.value if first_tok_bc is not None else None
+    wt = witness_bc.value if witness_bc is not None else None
+    gate = _scan_gate_set(ac, wt) if wt is not None else None
+    return ac, _scan_skip_set(ac, ft), ft, wt, gate
+
+
 def _probe_text(raw: str) -> str:
     """The probe-safe view of a raw sentence: apply the two
     normalize_sentence deletions able to merge fragments into a new token
@@ -316,10 +345,6 @@ def _scan_skip_set(ac: TokenAhoCorasick, ft: frozenset | None) -> frozenset:
     return _cached_by_identity(
         _SKIP_CACHE, ac, ft,
         lambda: ac.start_tokens if ft is None else (ac.start_tokens | ft))
-
-
-def _display_text(title: str) -> str:
-    return title.replace("_", " ")
 
 
 def _capitalize(name: str) -> str:
@@ -602,64 +627,6 @@ def fused_anchor_mentions(pages: DataFrame, redirect_map_bc,
     )
 
 
-# --------------------------------------------------------------------------
-# dictionary-based detection (north star: per-executor Aho-Corasick)
-# --------------------------------------------------------------------------
-
-def detect_dictionary_mentions(sentences: DataFrame, alias_bc) -> DataFrame:
-    """Scan every sentence against the full broadcast alias dictionary.
-
-    Output: (url, sent_id, rel_pos, tokens, start, end, alias, entity).
-    The automaton is built once per executor process (module-global cache
-    keyed by the broadcast payload id) — the north-star requirement.
-    """
-    schema = ArrayType(StructType([
-        StructField("start", IntegerType()),
-        StructField("end", IntegerType()),
-        StructField("alias", StringType()),
-        StructField("entity", StringType()),
-    ]))
-
-    @pandas_udf(StructType([
-        StructField("tokens", ArrayType(StringType())),
-        StructField("mentions", schema),
-    ]))
-    def _scan(sentence: pd.Series) -> pd.DataFrame:
-        ac = _automaton_for(alias_bc)
-        skip = _scan_skip_set(ac, None)
-        gate = _scan_gate_set(ac, None)
-        toks_out, ments_out = [], []
-        for sent in sentence:
-            tokens = tokenize(sent or "")
-            hits, _ = _scan_tokens(tokens, ac, skip, None, gate)
-            toks_out.append(tokens)
-            ments_out.append(hits)
-        return pd.DataFrame({"tokens": toks_out, "mentions": ments_out})
-
-    # pure function; non-determinism marking is an optimizer fence so the
-    # explode/filter over the UDF output cannot duplicate the
-    # ArrowEvalPython node (guide-documented filter-pushdown copy that
-    # doubled the whole scan per plan branch)
-    _scan = _scan.asNondeterministic()
-
-    scanned = sentences.select(
-        "url", "sent_id", "rel_pos", _scan(F.col("sentence")).alias("tm"))
-    return (
-        scanned.select(
-            "url", "sent_id", "rel_pos",
-            F.col("tm.tokens").alias("tokens"),
-            F.explode(F.col("tm.mentions")).alias("m"),
-        )
-        .select(
-            "url", "sent_id", "rel_pos", "tokens",
-            F.col("m.start").alias("start"),
-            F.col("m.end").alias("end"),
-            F.col("m.alias").alias("alias"),
-            F.col("m.entity").alias("entity"),
-        )
-    )
-
-
 WINDOW_ROWS_DDL = ("url string, sent_id int, rel_pos double, "
                    "subject string, object string, n_slots int, "
                    "slots array<struct<slot: int, word: string>>")
@@ -878,80 +845,9 @@ def anchor_windows_relational(pages: DataFrame, redirects: DataFrame,
                     "n_slots", "slots"))
 
 
-def fused_dictionary_mentions(pages: DataFrame, alias_bc,
-                              lang: str | None = "en",
-                              keep_cols: tuple = ()) -> DataFrame:
-    """pages(html) → dictionary-candidate mention rows in ONE Arrow UDF node
-    (fused analogue of ``extract_text → explode_sentences →
-    detect_dictionary_mentions``; same per-executor automaton cache)."""
-    from fact_extraction_spark.textops.wikitext import (
-        extract_article_text, extract_sentences)
-
-    schema = ArrayType(StructType([
-        StructField("sent_id", IntegerType()),
-        StructField("rel_pos", DoubleType()),
-        StructField("tokens", ArrayType(StringType())),
-        StructField("mentions", ArrayType(StructType([
-            StructField("start", IntegerType()),
-            StructField("end", IntegerType()),
-            StructField("alias", StringType()),
-            StructField("entity", StringType()),
-        ]))),
-    ]))
-
-    @pandas_udf(schema)
-    def _fused(html: pd.Series) -> pd.Series:
-        ac = _automaton_for(alias_bc)
-        skip = _scan_skip_set(ac, None)
-        gate = _scan_gate_set(ac, None)
-
-        def _page(b) -> list:
-            text = extract_article_text(
-                (bytes(b) if b is not None else b"").decode(
-                    "utf-8", errors="replace"))
-            out = []
-            for sent_id, r in enumerate(extract_sentences(text)):
-                tokens = tokenize(r["sentence"] or "")
-                hits, _ = _scan_tokens(tokens, ac, skip, None, gate)
-                if hits:
-                    out.append((sent_id, r["rel_pos"], tokens, hits))
-            return out
-
-        return html.map(_page)
-
-    # pure function; non-determinism marking is an optimizer fence so the
-    # explode/filter over the UDF output cannot duplicate the
-    # ArrowEvalPython node (guide-documented filter-pushdown copy that
-    # doubled the whole scan per plan branch)
-    _fused = _fused.asNondeterministic()
-
-    df = pages
-    if lang is not None:
-        df = df.filter(F.col("lang") == lang)
-    tagged = df.select("url", *keep_cols, _fused(F.col("html")).alias("ss"))
-    return (
-        tagged.select("url", *keep_cols, F.explode("ss").alias("s"))
-        .select(
-            "url", *keep_cols,
-            F.col("s.sent_id").alias("sent_id"),
-            F.col("s.rel_pos").alias("rel_pos"),
-            F.col("s.tokens").alias("tokens"),
-            F.explode(F.col("s.mentions")).alias("m"),
-        )
-        .select(
-            "url", *keep_cols, "sent_id", "rel_pos", "tokens",
-            F.col("m.start").alias("start"),
-            F.col("m.end").alias("end"),
-            F.col("m.alias").alias("alias"),
-            F.col("m.entity").alias("entity"),
-        )
-    )
-
-
 # --------------------------------------------------------------------------
-# map-side dictionary detection (the documented scale fallback: bounded
-# hot-head automaton + relational n-gram join for the long tail — the full
-# alias dictionary is never collected to the driver)
+# dictionary detection: hot-head automaton scan + relational n-gram join
+# for the long tail (see the module docstring)
 # --------------------------------------------------------------------------
 
 ALIAS_KEY_SCHEMA = StructType([
@@ -1010,22 +906,13 @@ def split_alias_dictionary(aliases: DataFrame, hot_k: int = 100_000,
     return head, tail
 
 
-SENTENCE_HITS_SCHEMA = ArrayType(StructType([
-    StructField("sent_id", IntegerType()),
-    StructField("rel_pos", DoubleType()),
-    StructField("tokens", ArrayType(StringType())),
-    StructField("hits", ArrayType(StructType([
-        StructField("start", IntegerType()),
-        StructField("end", IntegerType()),
-        StructField("alias", StringType()),
-        StructField("entity", StringType()),
-    ]))),
-    StructField("cand", ArrayType(IntegerType())),
-]))
+# bound on each broadcast tail token set (first tokens, witnesses); above
+# it the set is None and the scan falls back to its exact slow path
+TAIL_BROADCAST_ROWS = 2_000_000
 
 
 def collect_first_token_broadcast(tail: DataFrame,
-                                  max_rows: int = 2_000_000):
+                                  max_rows: int = TAIL_BROADCAST_ROWS):
     """Broadcast the DISTINCT first tokens of the tail alias keys as a
     Python frozenset, or None when the set exceeds ``max_rows``.
 
@@ -1042,15 +929,11 @@ def collect_first_token_broadcast(tail: DataFrame,
     candidate positions instead of every token. Above ``max_rows`` the
     caller falls back to the relational posexplode + semi-join path."""
     firsts = tail.select(F.split("key", " ")[0].alias("tok")).distinct()
-    rows = firsts.limit(max_rows + 1).collect()
-    if len(rows) > max_rows:
-        return None
-    spark = tail.sparkSession
-    return spark.sparkContext.broadcast(frozenset(r["tok"] for r in rows))
+    return _broadcast_token_set(firsts, max_rows)
 
 
 def collect_tail_witness_broadcast(tail: DataFrame,
-                                   max_rows: int = 2_000_000):
+                                   max_rows: int = TAIL_BROADCAST_ROWS):
     """Broadcast a WITNESS-token set for the tail aliases (one selective
     token per alias: first non-stopword, else first — same _WITNESS_STOP
     list as TokenAhoCorasick.witness_tokens), or None above ``max_rows``.
@@ -1079,141 +962,63 @@ def collect_tail_witness_broadcast(tail: DataFrame,
                 .select("key", F.element_at(toks, 1).alias("tok")))
     wits = (picked.select("tok").unionByName(fallback.select("tok"))
             .where(F.col("tok").isNotNull()).distinct())
-    rows = wits.limit(max_rows + 1).collect()
+    return _broadcast_token_set(wits, max_rows)
+
+
+def _broadcast_token_set(toks: DataFrame, max_rows: int):
+    """Broadcast the ``tok`` column of ``toks`` as a frozenset, or None
+    when it holds more than ``max_rows`` rows."""
+    rows = toks.limit(max_rows + 1).collect()
     if len(rows) > max_rows:
         return None
-    spark = tail.sparkSession
-    return spark.sparkContext.broadcast(frozenset(r["tok"] for r in rows))
+    return toks.sparkSession.sparkContext.broadcast(
+        frozenset(r["tok"] for r in rows))
 
 
-def collect_tail_broadcasts(tail: DataFrame, max_rows: int = 2_000_000):
+def empty_tail_broadcasts(spark: SparkSession):
+    """(first_token_bc, witness_bc, tail_empty) of an EMPTY tail: both sets
+    empty. Handed to the scan they turn on sentence pruning and the
+    witness gate while marking no candidate position — the full-dictionary
+    ("broadcast") strategy is exactly this case."""
+    empty = spark.sparkContext.broadcast(frozenset())
+    return empty, empty, True
+
+
+def collect_tail_broadcasts(tail: DataFrame,
+                            max_rows: int = TAIL_BROADCAST_ROWS):
     """(first_token_bc, witness_bc, tail_empty) for the tail, with ONE cheap
     limit(1) probe short-circuiting both driver collect jobs when the tail
     is empty (every alias fit in the head — common in tests and bounded
-    domains; ADVICE r6): the empty tail's sets are empty frozensets by
-    definition. ``tail_empty`` lets callers skip _mapside_union's own
-    emptiness probe."""
+    domains; ADVICE r6). Either set is None above ``max_rows``."""
     if tail.select("key").limit(1).count() == 0:
-        empty = tail.sparkSession.sparkContext.broadcast(frozenset())
-        return empty, empty, True
+        return empty_tail_broadcasts(tail.sparkSession)
     return (collect_first_token_broadcast(tail, max_rows),
             collect_tail_witness_broadcast(tail, max_rows), False)
 
 
-def fused_sentence_hits(pages: DataFrame, head_bc,
-                        lang: str | None = "en",
-                        include_unanchored: bool = False,
-                        first_tok_bc=None,
-                        prune_empty: bool = False,
-                        witness_bc=None,
-                        no_tail: bool = False) -> DataFrame:
-    """pages(html) → one row per sentence: (url, sent_id, rel_pos, tokens,
-    hits, cand) where ``hits`` are the hot-head automaton matches and
-    ``cand`` the token positions where a tail alias could start (empty
-    unless ``first_tok_bc`` — see collect_first_token_broadcast — is
-    given). ``include_unanchored`` lifts the reference-parity keeps-a-link
-    sentence filter for anchor-free web text. With ``prune_empty``,
-    sentences with no hit and no candidate position are dropped INSIDE the
-    UDF — on web-shaped pages the overwhelming filler majority, whose
-    tokens then never cross Arrow, never persist and never explode. Only
-    prune when the tail is covered: either ``first_tok_bc`` is set or the
-    dictionary has no tail at all. Same per-executor automaton cache as
-    the broadcast path, but the broadcast payload is the bounded head, not
-    the full dictionary."""
-    from fact_extraction_spark.textops.wikitext import (
-        extract_article_text, iter_raw_sentences, tokens_of_normalized)
-
-    @pandas_udf(SENTENCE_HITS_SCHEMA)
-    def _fused(html: pd.Series) -> pd.Series:
-        ac = _automaton_for(head_bc)
-        ft = first_tok_bc.value if first_tok_bc is not None else None
-        wt = witness_bc.value if witness_bc is not None else None
-        skip = _scan_skip_set(ac, ft)
-        # the witness gate is exact only when the tail is covered by a
-        # witness set (or absent); otherwise suppress it — cand positions
-        # must survive for the tail join
-        gate_on = no_tail or wt is not None
-        gate = _scan_gate_set(ac, wt) if gate_on else None
-        # adaptive per-batch probes — see fused_sentence_hits_and_anchors
-        p = ((_gate_probe(ac, wt) if gate_on else _skip_probe(ac, ft))
-             if prune_empty else None)
-        bstate = {"probe": p, "pprobe": p, "n": 0, "m": 0, "pn": 0, "pm": 0}
-        skip_para = _make_paragraph_skip(bstate)
-
-        def _page(b) -> list:
-            text = extract_article_text(
-                (bytes(b) if b is not None else b"").decode(
-                    "utf-8", errors="replace"))
-            out = []
-            for sent_id, rel_pos, raw, anchors in iter_raw_sentences(
-                    text, include_unanchored=include_unanchored,
-                    skip_paragraph=skip_para):
-                probe = bstate["probe"]
-                if probe is not None and not anchors:
-                    bstate["n"] += 1
-                    if probe.search(_probe_text(raw)) is None:
-                        # filler fast path: skip normalize+tokenize
-                        bstate["m"] += 1
-                        continue
-                    if bstate["n"] >= 1024 and bstate["m"] * 4 < bstate["n"]:
-                        bstate["probe"] = None
-                tokens = tokens_of_normalized(raw)
-                hits, cand = _scan_tokens(tokens, ac, skip, ft, gate)
-                if prune_empty and not hits and not cand:
-                    continue
-                out.append((sent_id, rel_pos, tokens, hits, cand))
-            return out
-
-        return html.map(_page)
-
-    # pure function; non-determinism marking is an optimizer fence so the
-    # explode/filter over the UDF output cannot duplicate the
-    # ArrowEvalPython node (guide-documented filter-pushdown copy that
-    # doubled the whole scan per plan branch)
-    _fused = _fused.asNondeterministic()
-
-    df = pages
-    if lang is not None:
-        df = df.filter(F.col("lang") == lang)
-    return (
-        df.select("url", _fused(F.col("html")).alias("ss"))
-        .select("url", F.explode("ss").alias("s"))
-        .select(
-            "url",
-            F.col("s.sent_id").alias("sent_id"),
-            F.col("s.rel_pos").alias("rel_pos"),
-            F.col("s.tokens").alias("tokens"),
-            F.col("s.hits").alias("hits"),
-            F.col("s.cand").alias("cand"),
-        )
-    )
+HITS_SCHEMA = ArrayType(StructType([
+    StructField("start", IntegerType()),
+    StructField("end", IntegerType()),
+    StructField("alias", StringType()),
+    StructField("entity", StringType()),
+]))
 
 
 def sentence_head_hits(sentences: DataFrame, head_bc,
-                       first_tok_bc=None, witness_bc=None,
-                       no_tail: bool = False) -> DataFrame:
-    """Sentence-level analogue of ``fused_sentence_hits`` for callers that
-    already hold sentence rows (url, sent_id, rel_pos, sentence): emits one
-    row per sentence with tokens + hot-head automaton hits (possibly
-    empty) + candidate tail positions when ``first_tok_bc`` is given. Same
-    per-executor automaton cache."""
+                       first_tok_bc=None, witness_bc=None) -> DataFrame:
+    """Scan UDF for callers that already hold sentence rows (url, sent_id,
+    rel_pos, sentence): one row per sentence with tokens, hot-head
+    automaton hits (possibly empty) and candidate tail-start positions
+    (empty unless ``first_tok_bc`` is given). Tail sets as in _scan_state;
+    every sentence is emitted — nothing is pruned on this path."""
     @pandas_udf(StructType([
         StructField("tokens", ArrayType(StringType())),
-        StructField("hits", ArrayType(StructType([
-            StructField("start", IntegerType()),
-            StructField("end", IntegerType()),
-            StructField("alias", StringType()),
-            StructField("entity", StringType()),
-        ]))),
+        StructField("hits", HITS_SCHEMA),
         StructField("cand", ArrayType(IntegerType())),
     ]))
     def _scan(sentence: pd.Series) -> pd.DataFrame:
-        ac = _automaton_for(head_bc)
-        ft = first_tok_bc.value if first_tok_bc is not None else None
-        wt = witness_bc.value if witness_bc is not None else None
-        skip = _scan_skip_set(ac, ft)
-        gate = (_scan_gate_set(ac, wt) if (no_tail or wt is not None)
-                else None)
+        ac, skip, ft, _, gate = _scan_state(head_bc, first_tok_bc,
+                                            witness_bc)
         toks_out, hits_out, cand_out = [], [], []
         for sent in sentence:
             tokens = tokenize(sent or "")
@@ -1238,25 +1043,27 @@ def sentence_head_hits(sentences: DataFrame, head_bc,
                 F.col("th.cand").alias("cand"))
 
 
+def detect_dictionary_mentions(sentences: DataFrame, alias_bc) -> DataFrame:
+    """Scan every sentence against the full broadcast alias dictionary
+    (an empty tail). Output: (url, sent_id, rel_pos, tokens, start, end,
+    alias, entity)."""
+    ft_bc, wit_bc, _ = empty_tail_broadcasts(sentences.sparkSession)
+    return hot_hits(sentence_head_hits(sentences, alias_bc, ft_bc, wit_bc))
+
+
 def detect_dictionary_mentions_mapside_sentences(
-    sentences: DataFrame, head_bc, tail: DataFrame,
-    max_tail_tokens: int = 6, max_first_tokens: int = 2_000_000,
+    sentences: DataFrame, head_bc, tail: DataFrame, max_tail_tokens: int = 6,
 ) -> DataFrame:
     """Map-side dictionary detection over pre-split sentence rows: hot-head
-    automaton hits ∪ relational n-gram tail join (same machinery as
-    ``detect_dictionary_mentions_mapside``, minus the page extraction).
-    Candidate tail positions are marked in the scan pass whenever the
-    tail's first-token set fits ``max_first_tokens`` (see
-    collect_first_token_broadcast), so only they explode downstream."""
+    automaton hits ∪ relational n-gram tail join (_mapside_union)."""
     from fact_extraction_spark.caches import track
 
-    ft_bc, wit_bc, tail_empty = collect_tail_broadcasts(tail,
-                                                         max_first_tokens)
+    ft_bc, wit_bc, tail_empty = collect_tail_broadcasts(tail)
     # the scan output feeds THREE subtrees of the union (hot hits, candidate
     # positions, the tail join-back); persist so the UDF pass over the
     # corpus executes once instead of once per branch
-    sent = track(sentence_head_hits(sentences, head_bc, first_tok_bc=ft_bc,
-                                    witness_bc=wit_bc).persist())
+    sent = track(sentence_head_hits(sentences, head_bc, ft_bc,
+                                    wit_bc).persist())
     sent.count()  # eager fill: branches of one action race an unfilled cache
     return _mapside_union(sent, tail, max_tail_tokens,
                           use_cand=ft_bc is not None, tail_empty=tail_empty)
@@ -1266,12 +1073,7 @@ SENTENCE_HITS_ANCHORS_SCHEMA = ArrayType(StructType([
     StructField("sent_id", IntegerType()),
     StructField("rel_pos", DoubleType()),
     StructField("tokens", ArrayType(StringType())),
-    StructField("hits", ArrayType(StructType([
-        StructField("start", IntegerType()),
-        StructField("end", IntegerType()),
-        StructField("alias", StringType()),
-        StructField("entity", StringType()),
-    ]))),
+    StructField("hits", HITS_SCHEMA),
     StructField("amentions", MENTION_SCHEMA),
     StructField("cand", ArrayType(IntegerType())),
 ]))
@@ -1282,54 +1084,48 @@ def fused_sentence_hits_and_anchors(pages: DataFrame, head_bc,
                                     lang: str | None = "en",
                                     include_unanchored: bool = False,
                                     first_tok_bc=None,
-                                    prune_empty: bool = False,
-                                    witness_bc=None,
-                                    no_tail: bool = False) -> DataFrame:
-    """ONE corpus pass emitting BOTH dictionary-automaton hits and
-    redirect-resolved anchor mentions per sentence.
+                                    witness_bc=None) -> DataFrame:
+    """Scan UDF over pages: ONE corpus pass emitting BOTH dictionary-
+    automaton hits and redirect-resolved anchor mentions per sentence.
 
     The dictionary pipeline needs two mention views of the same pages —
     AC-dictionary candidates (stage 2a) and trusted anchor tags (profile
     building for the stage-2b tf-idf ranking). Running them as separate
     fused UDFs costs two full html→sentences→tokens passes over the
     corpus; this function pays the extraction exactly once. Output: one
-    row per sentence with (tokens, hits, amentions, cand) — ``cand`` is
-    the candidate tail-start positions when ``first_tok_bc`` (see
-    collect_first_token_broadcast) is given, else empty.
+    row per sentence with (tokens, hits, amentions, cand). Tail sets as in
+    _scan_state.
 
-    ``prune_empty`` drops sentences with no hit, no anchor mention and no
-    candidate position INSIDE the UDF: on web-shaped pages that is the
-    filler majority, whose tokens then never cross Arrow, never enter the
-    sentence persist and never reach the n-gram explode — the per-byte
-    cost of anchor-free corpora collapses to the Python cascade+automaton
-    scan. Only safe when every downstream consumer filters on one of the
-    three (hot_hits, anchor_mention_rows, the cand-driven tail join) AND
-    the tail is covered: pass it only with ``first_tok_bc`` set or when no
-    tail path will run (full-dictionary broadcast mode)."""
+    When ``first_tok_bc`` is given (the tail is covered: every tail match
+    starts at a marked ``cand`` position), sentences with no hit, no
+    anchor mention and no candidate position are dropped INSIDE the UDF:
+    on web-shaped pages that is the filler majority, whose tokens then
+    never cross Arrow, never enter the sentence persist and never reach
+    the n-gram explode. Every downstream consumer filters on one of the
+    three (hot_hits, anchor_mention_rows, the cand-driven tail join).
+    Without it every sentence is emitted, for the posexplode tail join."""
     from fact_extraction_spark.textops.wikitext import (
         extract_article_text, iter_raw_sentences, tokens_of_normalized)
 
     @pandas_udf(SENTENCE_HITS_ANCHORS_SCHEMA)
     def _fused(html: pd.Series) -> pd.Series:
-        ac = _automaton_for(head_bc)
+        ac, skip, ft, wt, gate = _scan_state(head_bc, first_tok_bc,
+                                             witness_bc)
         rmap = redirect_map_bc.value
-        ft = first_tok_bc.value if first_tok_bc is not None else None
-        wt = witness_bc.value if witness_bc is not None else None
-        skip = _scan_skip_set(ac, ft)
-        # witness gate: exact only when the tail is covered by a witness
-        # set (or absent) — see _scan_gate_set / _scan_tokens
-        gate_on = no_tail or wt is not None
-        gate = _scan_gate_set(ac, wt) if gate_on else None
-        # adaptive per-batch probes: the raw-text regex skips
-        # normalize+tokenize for inert filler (and, at paragraph level, the
-        # whole sentence split — see _make_paragraph_skip), but on
-        # entity-dense text (most sentences naming SOME dictionary token)
-        # it is pure overhead — each level stops probing for the rest of
-        # the batch once its sample shows the skip rate under the ~1/4
-        # breakeven (measured: probe 25 MB/s vs tokenize 7 MB/s per core).
-        # Purely a performance device: output is invariant either way.
-        p = ((_gate_probe(ac, wt) if gate_on else _skip_probe(ac, ft))
-             if prune_empty else None)
+        prune = ft is not None
+        # adaptive per-batch probes, only where sentences are pruned: the
+        # raw-text regex skips normalize+tokenize for inert filler (and, at
+        # paragraph level, the whole sentence split — see
+        # _make_paragraph_skip), but on entity-dense text (most sentences
+        # naming SOME dictionary token) it is pure overhead — each level
+        # stops probing for the rest of the batch once its sample shows the
+        # skip rate under the ~1/4 breakeven (measured: probe 25 MB/s vs
+        # tokenize 7 MB/s per core). Purely a performance device: output is
+        # invariant either way.
+        p = None
+        if prune:
+            p = (_gate_probe(ac, wt) if gate is not None
+                 else _skip_probe(ac, ft))
         bstate = {"probe": p, "pprobe": p, "n": 0, "m": 0, "pn": 0, "pm": 0}
         skip_para = _make_paragraph_skip(bstate)
         find_spans = _paragraph_anchor_spans()
@@ -1358,7 +1154,7 @@ def fused_sentence_hits_and_anchors(pages: DataFrame, head_bc,
                 tokens = tokens_of_normalized(raw)
                 hits, cand = _scan_tokens(tokens, ac, skip, ft, gate)
                 aspans = find_spans(tokens, anchors, rmap)
-                if prune_empty and not hits and not aspans and not cand:
+                if prune and not hits and not aspans and not cand:
                     continue
                 out.append((sent_id, rel_pos, tokens, hits, aspans,
                             cand))
@@ -1418,62 +1214,26 @@ def anchor_mention_rows(sent: DataFrame) -> DataFrame:
     )
 
 
-def detect_dictionary_mentions_mapside(
-    pages: DataFrame, head_bc, tail: DataFrame,
-    lang: str | None = "en", max_tail_tokens: int = 6,
-    max_first_tokens: int = 2_000_000,
-) -> DataFrame:
-    """Dictionary mention detection without a full-dictionary collect.
-
-    Hot path: the bounded head automaton inside the fused pandas UDF.
-    Tail path: sentence n-grams (1..max_tail_tokens) pre-filtered to
-    positions whose first token starts some tail alias, then a shuffle
-    join against the tail alias table on the tokenizer-space key — at
-    warehouse scale that table is bucketed by ``key`` so the join
-    co-locates. The position pre-filter runs inside the scan UDF against
-    the broadcast first-token set whenever it fits ``max_first_tokens``
-    (sentences with no hit and no candidate are dropped before Arrow);
-    above the bound it falls back to posexplode + broadcast semi-join over
-    every sentence. Output schema matches ``fused_dictionary_mentions``.
-    """
-    from fact_extraction_spark.caches import track
-
-    ft_bc, wit_bc, tail_empty = collect_tail_broadcasts(tail,
-                                                         max_first_tokens)
-    sent = track(fused_sentence_hits(
-        pages, head_bc, lang=lang, first_tok_bc=ft_bc,
-        prune_empty=ft_bc is not None, witness_bc=wit_bc).persist())
-    sent.count()  # eager fill: branches of one action race an unfilled cache
-    return _mapside_union(sent, tail, max_tail_tokens,
-                          use_cand=ft_bc is not None, tail_empty=tail_empty)
-
-
 def _mapside_union(sent: DataFrame, tail: DataFrame,
-                   max_tail_tokens: int, use_cand: bool = False,
-                   tail_empty: bool | None = None) -> DataFrame:
+                   max_tail_tokens: int, use_cand: bool,
+                   tail_empty: bool) -> DataFrame:
     """Hot-head hits ∪ n-gram tail join over sentence rows
-    (url, sent_id, rel_pos, tokens, hits[, cand]).
+    (url, sent_id, rel_pos, tokens, hits, cand).
 
     ``use_cand`` requires ``sent.cand`` to hold the candidate tail-start
     positions (computed in the scan UDF against the broadcast first-token
     set): the n-gram build then explodes ONLY those positions — on filler-
     heavy web text a >100× row reduction over posexploding every token.
 
-    ``tail_empty``: the caller's already-known emptiness of the tail
-    (collect_tail_broadcasts probes it once at context build); None means
-    unknown — probe here as before."""
+    ``tail_empty`` (known from collect_tail_broadcasts' probe): the
+    n-gram explode + two joins would still execute over the whole corpus
+    just to produce zero rows, so an empty tail returns the hot hits."""
     from fact_extraction_spark.caches import track
 
     hot = hot_hits(sent)
-
-    if tail_empty is True:
+    if tail_empty:
         return hot
     tail_keyed = track(tail.select("alias", "entity", "key").persist())
-    # empty tail (every alias fit in the head): the n-gram explode +
-    # two joins would still execute over the whole corpus just to produce
-    # zero rows — short-circuit with one cheap dimension-table probe
-    if tail_empty is None and tail_keyed.limit(1).count() == 0:
-        return hot
 
     if use_cand:
         # candidate positions were marked in the scan pass (same semantics

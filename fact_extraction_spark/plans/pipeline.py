@@ -36,12 +36,12 @@ from fact_extraction_spark.operators.link_ranking import (
     build_entity_profiles, compute_idf, disambiguate_mentions,
 )
 from fact_extraction_spark.operators.mentions import (
-    _mapside_union, alias_join_keys, anchor_mention_rows,
-    anchor_windows_relational,
+    TAIL_BROADCAST_ROWS, _mapside_union, alias_join_keys,
+    anchor_mention_rows, anchor_windows_relational,
     build_alias_candidates, collect_alias_broadcast,
-    collect_redirect_map,
-    fused_anchor_mentions, fused_anchor_windows,
-    fused_sentence_hits_and_anchors, hot_hits, split_alias_dictionary,
+    collect_redirect_map, collect_tail_broadcasts, empty_tail_broadcasts,
+    fused_anchor_windows, fused_sentence_hits_and_anchors,
+    split_alias_dictionary,
 )
 from fact_extraction_spark.operators.mentions import resolve_redirects
 from fact_extraction_spark.operators.scoring import score_candidates
@@ -82,17 +82,17 @@ class PipelineConfig:
     # alias dictionary + tf-idf context-similarity disambiguation (stage 2b).
     mention_mode: str = "anchors"
     max_profile_words: int = 64
-    # Dictionary-mode detection strategy:
-    # "auto" (default) — count the (alias, entity) pairs (one agg over a
-    #   dimension table) and pick: "broadcast" under
-    #   ``dictionary_auto_threshold`` pairs (mapside's two extra shuffles
-    #   are pure overhead on a small dictionary), "mapside" above.
-    # "mapside" — bounded hot-head automaton broadcast + relational
-    #   n-gram join against the long-tail alias table; the full dictionary is
-    #   NEVER collected to the driver (at 10^7 aliases the full collect is a
-    #   multi-GB driver materialization + per-executor Python dict).
-    # "broadcast" — collect the whole dictionary into one automaton; fastest
-    #   when the dictionary is known-small (tests, bounded domains).
+    # Dictionary-mode head/tail split (detection is one plan: head
+    # automaton scan + n-gram join against the tail, _mapside_union):
+    # "mapside" — the ``dictionary_hot_k`` shortest aliases (+ every alias
+    #   longer than ``max_tail_tokens``) in the head, the rest in the tail;
+    #   the full dictionary is NEVER collected to the driver (at 10^7
+    #   aliases that is a multi-GB driver materialization).
+    # "broadcast" — the whole dictionary in the head, an empty tail: no
+    #   split jobs, no tail join; for known-small dictionaries (tests,
+    #   bounded domains).
+    # "auto" (default) — one count of the (alias, entity) pairs picks
+    #   "broadcast" up to ``dictionary_auto_threshold`` pairs, else mapside.
     dictionary_strategy: str = "auto"
     dictionary_auto_threshold: int = 200_000   # pairs; "auto" switch point
     # Dictionary mode only: also scan sentences WITHOUT any anchor link.
@@ -105,18 +105,6 @@ class PipelineConfig:
     dictionary_scan_unanchored: bool = False
     dictionary_hot_k: int = 100_000      # head size (aliases, not pairs)
     max_tail_tokens: int = 6             # n-gram bound for the tail join
-    # Dictionary-mode sentence pruning: drop sentences with no automaton
-    # hit, no anchor mention and no possible tail-alias start INSIDE the
-    # scan UDF — on web-shaped pages the filler majority, whose tokens then
-    # never cross Arrow, never enter the sentence persist and never reach
-    # the n-gram explode. Semantics-neutral (every downstream consumer
-    # filters on one of the three); in mapside mode it needs the tail's
-    # first-token set broadcast, gated by
-    # dictionary_first_token_broadcast_rows (the set is orders of magnitude
-    # smaller than the dictionary — aliases share first tokens — and the
-    # old posexplode path broadcast the very same set for its semi-join).
-    dictionary_prune_sentences: bool = True
-    dictionary_first_token_broadcast_rows: int = 2_000_000
     # Anchors-mode redirect resolution:
     # "broadcast" (default) — match-time Python dict from a bounded
     #   driver collect; fastest while the redirect table fits comfortably.
@@ -171,6 +159,41 @@ class PipelineConfig:
     # so the hot path leaves it off and sinks do sortWithinPartitions.
     sort_output: bool = False
 
+    def __post_init__(self):
+        # a misspelt choice would otherwise run some other code path silently
+        for name, allowed in _CONFIG_CHOICES.items():
+            value = getattr(self, name)
+            if value not in allowed:
+                raise ValueError(
+                    f"PipelineConfig.{name}={value!r}: expected one of "
+                    f"{', '.join(map(repr, allowed))}")
+
+
+_CONFIG_CHOICES = {
+    "mention_mode": ("anchors", "dictionary"),
+    "dictionary_strategy": ("auto", "broadcast", "mapside"),
+    "redirect_strategy": ("broadcast", "join"),
+    "training_join_strategy": ("auto", "broadcast", "salted"),
+}
+
+# per-model memo entries (dict_ctx, discovery_excluded) kept per kind
+_MODEL_MEMO_ENTRIES = 4
+
+
+def _memoize(extras: dict, key: tuple, value: tuple) -> None:
+    """Store ``value`` under ``key`` (kind = key[0]) in a LearnedModel's
+    extras, holding at most _MODEL_MEMO_ENTRIES entries of that kind: the
+    oldest is evicted first (dicts keep insertion order), and a persisted
+    DataFrame the evicted entry owns (value[0]) is released."""
+    extras.pop(key, None)  # a replaced entry becomes the newest
+    same = [k for k in extras
+            if isinstance(k, tuple) and k and k[0] == key[0]]
+    for old in same[:max(0, len(same) - _MODEL_MEMO_ENTRIES + 1)]:
+        owned = extras.pop(old)[0]
+        if isinstance(owned, DataFrame):
+            owned.unpersist()
+    extras[key] = value
+
 
 @dataclass
 class LearnedModel:
@@ -222,20 +245,22 @@ def _build_dict_ctx(spark: SparkSession, pages: DataFrame,
     collects. Keyed with the table objects PINNED and identity-checked
     (the id-recycling rule every cache here follows); dimension persists
     are re-pinned on hit because cache releases between legs may have
-    dropped them."""
+    dropped them. At most _MODEL_MEMO_ENTRIES contexts are kept per model.
+
+    Both strategies return one context shape; under "broadcast" the head
+    is the whole dictionary and the tail is known to be empty
+    (mentions.empty_tail_broadcasts)."""
     ctx_key = None
     if extras is not None and cands is None:
         ctx_key = ("dict_ctx", cfg.dictionary_strategy,
                    cfg.dictionary_auto_threshold, cfg.dictionary_hot_k,
-                   cfg.max_tail_tokens, cfg.dictionary_prune_sentences,
-                   cfg.dictionary_first_token_broadcast_rows)
+                   cfg.max_tail_tokens)
         cached = extras.get(ctx_key)
         if (cached is not None and cached[1] is pages
                 and cached[2] is redirects):
             ctx = cached[0]
             track(ctx["ambiguous"].persist())
-            if ctx["mode"] == "mapside":
-                track(ctx["tail"].persist())
+            track(ctx["tail"].persist())
             return ctx
     if cands is None:
         cands = build_alias_candidates(pages, redirects)
@@ -277,148 +302,109 @@ def _build_dict_ctx(spark: SparkSession, pages: DataFrame,
         logger.info("dictionary_strategy=auto: %d alias pairs -> %s",
                     n_pairs, strategy)
     if strategy == "broadcast":
-        ctx = {"mode": "broadcast", "ambiguous": ambiguous,
-               "alias_bc": collect_alias_broadcast(spark, cands),
-               "has_ambiguous": ambiguous.limit(1).count() > 0}
-        if ctx_key is not None:
-            extras[ctx_key] = (ctx, pages, redirects)
-        return ctx
-    head, tail = split_alias_dictionary(
-        cands, hot_k=cfg.dictionary_hot_k,
-        max_tail_tokens=cfg.max_tail_tokens, keyed=keyed)
-    # the ONLY driver materialization is the bounded head (≤ hot_k aliases
+        # the head IS the whole dictionary; the tail is known to be empty
+        head, tail = cands, keyed.limit(0)
+        ft_bc, wit_bc, tail_empty = empty_tail_broadcasts(spark)
+    else:
+        head, tail = split_alias_dictionary(
+            cands, hot_k=cfg.dictionary_hot_k,
+            max_tail_tokens=cfg.max_tail_tokens, keyed=keyed)
+    # the ONLY driver materialization is the head (mapside: ≤ hot_k aliases
     # + the rare >max_tail_tokens ones); the tail stays a DataFrame
     head_bc = collect_alias_broadcast(spark, head.select("alias", "entity"))
-    # make the promised bound OBSERVABLE: aliases longer than
-    # max_tail_tokens bypass hot_k unconditionally, so a long-alias-heavy
-    # dictionary can still blow up the driver — warn instead of failing
-    # silently (raise max_tail_tokens or pre-filter junk aliases upstream)
-    n_head = len(head_bc.value)
-    if n_head > 2 * cfg.dictionary_hot_k:
-        logger.warning(
-            "map-side dictionary head holds %d pairs (> 2x hot_k=%d): the "
-            "long-alias overflow (> max_tail_tokens=%d tokens) dominates; "
-            "consider raising max_tail_tokens", n_head,
-            cfg.dictionary_hot_k, cfg.max_tail_tokens)
     tail_keyed = track(tail.select("alias", "entity", "key").persist())
-    # first-token set (in-scan candidate marking) + witness set (sentence-
-    # level match gate, one selective token per tail alias) — both None
-    # when pruning is off or the set exceeds the broadcast bound; the tail
-    # join then falls back to posexplode + semi-join / ungated scanning
-    ft_bc = wit_bc = tail_known_empty = None
-    if cfg.dictionary_prune_sentences:
-        from fact_extraction_spark.operators.mentions import (
-            collect_tail_broadcasts)
-        bound = cfg.dictionary_first_token_broadcast_rows
-        ft_bc, wit_bc, tail_known_empty = collect_tail_broadcasts(
-            tail_keyed, bound)
-    ctx = {"mode": "mapside", "head_bc": head_bc, "ambiguous": ambiguous,
+    if strategy == "mapside":
+        # make the promised bound OBSERVABLE: aliases longer than
+        # max_tail_tokens bypass hot_k unconditionally, so a long-alias-
+        # heavy dictionary can still blow up the driver — warn instead of
+        # failing silently (raise max_tail_tokens or pre-filter junk
+        # aliases upstream)
+        n_head = len(head_bc.value)
+        if n_head > 2 * cfg.dictionary_hot_k:
+            logger.warning(
+                "map-side dictionary head holds %d pairs (> 2x hot_k=%d): "
+                "the long-alias overflow (> max_tail_tokens=%d tokens) "
+                "dominates; consider raising max_tail_tokens", n_head,
+                cfg.dictionary_hot_k, cfg.max_tail_tokens)
+        # first-token set (in-scan candidate marking) + witness set
+        # (sentence-level match gate, one selective token per tail alias)
+        # — each None when it exceeds the broadcast bound; the tail join
+        # then falls back to posexplode + semi-join / ungated scanning
+        ft_bc, wit_bc, tail_empty = collect_tail_broadcasts(
+            tail_keyed, TAIL_BROADCAST_ROWS)
+    ctx = {"mode": strategy, "head_bc": head_bc, "ambiguous": ambiguous,
            "tail": tail_keyed, "first_tok_bc": ft_bc, "witness_bc": wit_bc,
-           # probed once at build; spares every extract _mapside_union's
-           # own limit(1) emptiness job (None = unknown, probe as before)
-           "tail_empty": tail_known_empty,
+           # probed once at build; spares every extract the tail join
+           "tail_empty": tail_empty,
            # materialized once at build; spares every extract the
            # per-call limit(1) probe of the ambiguous-alias dimension
            "has_ambiguous": ambiguous.limit(1).count() > 0}
     if ctx_key is not None:
-        extras[ctx_key] = (ctx, pages, redirects)
+        _memoize(extras, ctx_key, (ctx, pages, redirects))
     return ctx
 
 
 def _page_mentions(pages: DataFrame, redirect_map_bc, lang: str | None,
-                   dict_ctx: dict | None = None,
-                   cfg: "PipelineConfig | None" = None) -> DataFrame:
-    """pages → mention rows, excluding self-links (page linking itself,
-    wikipedia_pattern_extractor.py:189-192 ``res != entity``).
+                   dict_ctx: dict, cfg: "PipelineConfig") -> DataFrame:
+    """Dictionary-mode pages → mention rows, excluding self-links (page
+    linking itself, wikipedia_pattern_extractor.py:189-192 ``res !=
+    entity``).
 
-    With ``dict_ctx`` set (mention_mode="dictionary"), runs the north-star
-    stage 2: Aho-Corasick detection over the alias dictionary (full
-    broadcast or hot-head + relational tail, per dict_ctx["mode"]), then
-    tf-idf context-similarity disambiguation (stage 2b) with entity profiles
+    Runs the north-star stage 2: Aho-Corasick detection over the head of
+    the alias dictionary plus the relational tail join (an empty tail under
+    the "broadcast" strategy, see _build_dict_ctx), then tf-idf
+    context-similarity disambiguation (stage 2b) with entity profiles
     built from the trusted anchor-tagged mentions of the same pages.
     """
-    if dict_ctx is None:
-        # ONE ArrowEvalPython node for the whole html→mentions chain: three
-        # chained pandas UDFs would each get their own python worker per
-        # task (3× processes, 2 extra Arrow round-trips of the full text)
-        # and anti-scale at high core counts (see fused_anchor_mentions)
-        mentions = fused_anchor_mentions(pages, redirect_map_bc, lang=lang)
+    # ONE corpus pass yields both the dictionary candidates (automaton
+    # hits) and the trusted anchor mentions that build the tf-idf ranking
+    # profiles — running them as two fused UDFs costs a second full
+    # html→sentences pass over the corpus
+    ft_bc = dict_ctx["first_tok_bc"]
+    sent = track(fused_sentence_hits_and_anchors(
+        pages, dict_ctx["head_bc"], redirect_map_bc, lang=lang,
+        include_unanchored=cfg.dictionary_scan_unanchored,
+        first_tok_bc=ft_bc, witness_bc=dict_ctx["witness_bc"]).persist())
+    # EAGER cache fill: the sentence rows feed several INDEPENDENT
+    # subtrees of the downstream action (hot hits, candidate positions,
+    # the tail join-back, anchor-mention profiles, the ambiguous/
+    # unambiguous splits) — independent stages of one job run
+    # concurrently, and each that reaches an unfilled cache partition
+    # recomputes the whole html→scan UDF chain for it. One count()
+    # executes the corpus scan exactly once; every branch then reads the
+    # cache (the round-2 windows-persist lesson applied to the scan
+    # persist).
+    sent.count()
+    candidates = _mapside_union(
+        sent, dict_ctx["tail"], cfg.max_tail_tokens,
+        use_cand=ft_bc is not None, tail_empty=dict_ctx["tail_empty"])
+    # stage 2b runs ONLY over hits of ambiguous aliases (dictionary-side
+    # split, see _build_dict_ctx); unambiguous hits pass through — the
+    # ranking subplan's corpus-sized shuffles shrink to the ambiguous
+    # slice, and when the dictionary has no ambiguity at all the
+    # profile/idf build is skipped outright.
+    cols = ["url", "sent_id", "rel_pos", "tokens", "start", "end", "entity"]
+    if not dict_ctx["has_ambiguous"]:
+        mentions = candidates.select(*cols)
     else:
-        # ONE corpus pass yields both the dictionary candidates (automaton
-        # hits) and the trusted anchor mentions that build the tf-idf
-        # ranking profiles — running them as two fused UDFs costs a second
-        # full html→sentences pass over the corpus
-        head_bc = (dict_ctx["alias_bc"] if dict_ctx["mode"] == "broadcast"
-                   else dict_ctx["head_bc"])
-        # prune filler sentences in the scan UDF whenever the tail is
-        # covered: broadcast mode has no tail (the head IS the full
-        # dictionary), mapside mode needs the first-token set broadcast
-        ft_bc = dict_ctx.get("first_tok_bc")
-        wit_bc = dict_ctx.get("witness_bc")
-        no_tail = dict_ctx["mode"] == "broadcast"
-        prune = bool(cfg.dictionary_prune_sentences if cfg else True) and (
-            no_tail or ft_bc is not None)
-        sent = track(fused_sentence_hits_and_anchors(
-            pages, head_bc, redirect_map_bc, lang=lang,
-            include_unanchored=(cfg.dictionary_scan_unanchored if cfg
-                                else False),
-            first_tok_bc=ft_bc, prune_empty=prune,
-            witness_bc=wit_bc, no_tail=no_tail).persist())
-        # EAGER cache fill: the sentence rows feed several INDEPENDENT
-        # subtrees of the downstream action (hot hits, candidate positions,
-        # the tail join-back, anchor-mention profiles, the ambiguous/
-        # unambiguous splits) — independent stages of one job run
-        # concurrently, and each that reaches an unfilled cache partition
-        # recomputes the whole html→scan UDF chain for it. One count()
-        # executes the corpus scan exactly once; every branch then reads
-        # the cache (the round-2 windows-persist lesson applied to the
-        # scan persist).
-        sent.count()
-        if dict_ctx["mode"] == "broadcast":
-            candidates = hot_hits(sent)
-        else:
-            candidates = _mapside_union(
-                sent.select("url", "sent_id", "rel_pos", "tokens", "hits",
-                            "cand"),
-                dict_ctx["tail"],
-                (cfg.max_tail_tokens if cfg else 6),
-                use_cand=ft_bc is not None,
-                tail_empty=dict_ctx.get("tail_empty"))
-        # stage 2b runs ONLY over hits of ambiguous aliases (dictionary-side
-        # split, see _build_dict_ctx); unambiguous hits pass through — the
-        # ranking subplan's corpus-sized shuffles shrink to the ambiguous
-        # slice, and when the dictionary has no ambiguity at all the
-        # profile/idf build is skipped outright (one dimension-table probe).
-        amb = dict_ctx["ambiguous"]
-        cols = ["url", "sent_id", "rel_pos", "tokens", "start", "end",
-                "entity"]
-        has_amb = dict_ctx.get("has_ambiguous")
-        if has_amb is None:
-            has_amb = amb.limit(1).count() > 0
-        if not has_amb:
-            mentions = candidates.select(*cols)
-        else:
-            amb_b = F.broadcast(amb)
-            unambig = candidates.join(amb_b, "alias", "left_anti") \
-                .select(*cols)
-            ambig = candidates.join(amb_b, "alias", "left_semi")
-            anchor_mentions = anchor_mention_rows(sent)
-            profiles = track(build_entity_profiles(
-                anchor_mentions,
-                max_profile_words=(cfg.max_profile_words if cfg else 64))
-                .persist())
-            idf = compute_idf(profiles)
-            ranked = disambiguate_mentions(ambig, profiles, idf) \
-                .drop("link_score")
-            mentions = unambig.unionByName(ranked.select(*cols))
-        # no stage boundary HERE: the caller's windows persist+count right
-        # after candidate_windows() is the boundary (same recompute
-        # protection), and the windows rows are far smaller than mention
-        # rows carrying full sentence tokens — the round-3 eager
-        # localCheckpoint at this spot wrote every mention row (tokens
-        # included) to local disk before windowing, 2.85× the anchors-mode
-        # extract (VERDICT r3 "What's wrong" #2). On a cluster the committed
-        # table between stages is the windows table (sinks/snapshot).
+        amb_b = F.broadcast(dict_ctx["ambiguous"])
+        unambig = candidates.join(amb_b, "alias", "left_anti").select(*cols)
+        ambig = candidates.join(amb_b, "alias", "left_semi")
+        profiles = track(build_entity_profiles(
+            anchor_mention_rows(sent),
+            max_profile_words=cfg.max_profile_words).persist())
+        idf = compute_idf(profiles)
+        ranked = disambiguate_mentions(ambig, profiles, idf) \
+            .drop("link_score")
+        mentions = unambig.unionByName(ranked.select(*cols))
+    # no stage boundary HERE: the caller's windows persist+count right
+    # after candidate_windows() is the boundary (same recompute
+    # protection), and the windows rows are far smaller than mention rows
+    # carrying full sentence tokens — the round-3 eager localCheckpoint at
+    # this spot wrote every mention row (tokens included) to local disk
+    # before windowing, 2.85× the anchors-mode extract (VERDICT r3
+    # "What's wrong" #2). On a cluster the committed table between stages
+    # is the windows table (sinks/snapshot).
     return mentions.filter(
         F.col("entity") != capitalize_first(strip_name("url")))
 
@@ -591,7 +577,7 @@ def select_discovery_pages(
             excluded = (training_titles.unionByName(typed_not_ok)
                         .distinct().persist())
             cached = (excluded, excluded.count(), types)
-            model.extras[cache_key] = cached
+            _memoize(model.extras, cache_key, cached)
         excluded, n_excluded = cached[0], cached[1]
         if n_excluded <= cfg.discovery_exclude_broadcast_rows:
             return (
@@ -651,8 +637,6 @@ def extract(
     if cfg.mention_mode == "dictionary" and dict_ctx is None:
         dict_ctx = _build_dict_ctx(spark, pages, redirects, cfg,
                                    extras=model.extras)
-    if cfg.mention_mode != "dictionary":
-        dict_ctx = None
     # scoring fans out over windows (candidate keys + slot-word matches);
     # persist so the extraction UDF chain executes once. redlink drop =
     # fact_extractor.py:189-191. The persist holds the SLIM scoring schema

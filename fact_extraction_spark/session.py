@@ -15,6 +15,29 @@ from pyspark.sql import SparkSession
 # of 2k rows keep per-batch memory well under typical executor headroom.
 ARROW_MAX_RECORDS_PER_BATCH = 2048
 
+# driver heap sizing when SPARK_DRIVER_MEM is unset: a share of host RAM
+# (the rest is the JVM's off-heap, the Python workers and the OS), capped
+DRIVER_HEAP_SHARE = 0.5
+DRIVER_HEAP_CAP_MB = 32 * 1024
+
+
+def host_cpus() -> int:
+    """CPUs this process may run on (what ``nproc`` reports)."""
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
+
+
+def default_driver_memory(mem_bytes: int | None = None) -> str:
+    """``spark.driver.memory`` sized from host RAM: DRIVER_HEAP_SHARE of
+    ``mem_bytes`` (default: the host's RAM), at most DRIVER_HEAP_CAP_MB. In
+    local mode the driver heap is the executor heap, so a fixed size
+    either starves a big host or gets the JVM OOM-killed on a small one."""
+    if mem_bytes is None:  # the host's MemTotal
+        mem_bytes = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    mb = int(mem_bytes * DRIVER_HEAP_SHARE) >> 20
+    return f"{max(1, min(mb, DRIVER_HEAP_CAP_MB))}m"
+
 
 def get_spark(
     app_name: str = "fact_extraction_spark",
@@ -24,10 +47,12 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` in the sandbox and is
-    left unset under ``spark-submit`` (cluster manager decides).
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (default: the
+    host's CPU count) and is left unset under ``spark-submit`` (cluster
+    manager decides). The driver heap is ``$SPARK_DRIVER_MEM``, by default
+    sized from host RAM (default_driver_memory).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(host_cpus()))
 
     # Make the package importable inside Python workers regardless of the
     # driver's cwd. On a real cluster this is `spark-submit --py-files
@@ -70,9 +95,11 @@ def get_spark(
         # In local mode the driver IS the executor: all task threads share
         # this one heap with the DataFrame cache. 8g measurably GC-thrashes
         # at local[16+] on corpus-scale runs ("GCLocker retried" warnings,
-        # 1.3x task-time inflation); on a real cluster this is
-        # spark-submit's --executor-memory and the driver stays small.
-        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEM", "32g"),
+        # 1.3x task-time inflation), hence the 32g cap on big hosts; on a
+        # real cluster this is spark-submit's --executor-memory and the
+        # driver stays small.
+        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEM",
+                                              default_driver_memory()),
         "spark.ui.enabled": "false",
         "spark.executorEnv.PYTHONPATH": os.environ["PYTHONPATH"],
     }

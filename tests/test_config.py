@@ -2,8 +2,12 @@
 
 import os
 
+import pytest
+
 from fact_extraction_spark.plans.config import (
     generate_config_if_missing, load_config)
+from fact_extraction_spark.plans.pipeline import PipelineConfig
+from fact_extraction_spark.session import default_driver_memory
 
 
 def test_missing_config_generated_from_default(tmp_path):
@@ -84,3 +88,25 @@ type_matching = False
 """)
     cfg = load_config(str(path))
     assert cfg.type_matching is False
+
+
+@pytest.mark.parametrize("field", ["mention_mode", "dictionary_strategy",
+                                   "redirect_strategy",
+                                   "training_join_strategy"])
+def test_unknown_enumerated_choice_rejected(field):
+    """A misspelt choice fails at construction instead of silently running
+    another path (e.g. dictionary_strategy="brodcast" used to run
+    map-side)."""
+    with pytest.raises(ValueError, match=field):
+        PipelineConfig(**{field: "brodcast"})
+    PipelineConfig(**{field: getattr(PipelineConfig(), field)})
+
+
+def test_default_driver_memory_sized_from_host():
+    """Half of host RAM, in MiB, capped at 32 GiB."""
+    gib = 1 << 30
+    assert default_driver_memory(16 * gib) == "8192m"
+    assert default_driver_memory(int(15.7 * gib)) == "8038m"
+    assert default_driver_memory(64 * gib) == "32768m"
+    assert default_driver_memory(256 * gib) == "32768m"
+    assert default_driver_memory(1 * gib) == "512m"

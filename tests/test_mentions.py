@@ -95,13 +95,20 @@ def test_fused_anchor_equals_chained(spark, tables):
 
 
 def test_fused_dictionary_equals_chained(spark, tables):
+    """The page scan UDF with the full dictionary and an empty tail emits
+    the sentence path's mention rows over the 3-stage chain."""
     from fact_extraction_spark.operators.mentions import (
-        build_alias_candidates, fused_dictionary_mentions)
+        build_alias_candidates, empty_tail_broadcasts,
+        fused_sentence_hits_and_anchors, hot_hits)
     alias_bc = collect_alias_broadcast(
         spark, build_alias_candidates(tables["pages"], tables["redirects"]))
+    rmap = collect_redirect_map(spark, tables["redirects"])
     sents = explode_sentences(extract_text(tables["pages"], lang="en"))
     chained = detect_dictionary_mentions(sents, alias_bc)
-    fused = fused_dictionary_mentions(tables["pages"], alias_bc, lang="en")
+    ft_bc, wit_bc, _ = empty_tail_broadcasts(spark)
+    fused = hot_hits(fused_sentence_hits_and_anchors(
+        tables["pages"], alias_bc, rmap, lang="en",
+        first_tok_bc=ft_bc, witness_bc=wit_bc))
     cols = ["url", "sent_id", "rel_pos", "start", "end", "alias", "entity"]
     a = sorted(map(tuple, chained.select(*cols).collect()))
     b = sorted(map(tuple, fused.select(*cols).collect()))
@@ -159,32 +166,52 @@ def test_split_alias_dictionary_partitions_by_alias(spark, tables):
         assert r["key"] == " ".join(tokenize(r["alias"]))
 
 
-def test_mapside_dictionary_detection_equals_broadcast(spark, tables):
-    """The documented scale fallback (hot-head automaton + n-gram tail join)
-    emits exactly the broadcast path's mention rows (mentions.py module
-    docstring contract)."""
+def _page_path_mentions(spark, pages, rmap, head, tail, max_rows=None):
+    """Dictionary mention rows the way pipeline._page_mentions detects
+    them (before ranking): the page scan UDF over the broadcast head,
+    then _mapside_union with the tail; ``max_rows`` bounds the tail
+    broadcasts (0 forces the posexplode fallback)."""
     from fact_extraction_spark.operators.mentions import (
-        build_alias_candidates, collect_alias_broadcast,
-        detect_dictionary_mentions_mapside, fused_dictionary_mentions,
-        split_alias_dictionary)
+        TAIL_BROADCAST_ROWS, _mapside_union, collect_tail_broadcasts,
+        fused_sentence_hits_and_anchors)
+
+    head_bc = collect_alias_broadcast(spark, head.select("alias", "entity"))
+    ft_bc, wit_bc, tail_empty = collect_tail_broadcasts(
+        tail, TAIL_BROADCAST_ROWS if max_rows is None else max_rows)
+    sent = fused_sentence_hits_and_anchors(
+        pages, head_bc, rmap, lang=None,
+        first_tok_bc=ft_bc, witness_bc=wit_bc)
+    return _mapside_union(sent, tail, 6, use_cand=ft_bc is not None,
+                          tail_empty=tail_empty)
+
+
+def test_mapside_dictionary_detection_equals_broadcast(spark, tables):
+    """The hot-head automaton + n-gram tail join emits exactly the mention
+    rows of the full-dictionary head with an empty tail (mentions.py
+    module docstring contract)."""
+    from fact_extraction_spark.operators.mentions import (
+        alias_join_keys, build_alias_candidates, split_alias_dictionary)
 
     pages = tables["pages"]
+    rmap = collect_redirect_map(spark, tables["redirects"])
     cands = build_alias_candidates(pages, tables["redirects"])
 
-    full_bc = collect_alias_broadcast(spark, cands)
-    want = {(r["url"], r["sent_id"], r["start"], r["end"],
-             r["alias"], r["entity"])
-            for r in fused_dictionary_mentions(pages, full_bc,
-                                               lang=None).collect()}
+    def rows(df):
+        return {(r["url"], r["sent_id"], r["start"], r["end"],
+                 r["alias"], r["entity"]) for r in df.collect()}
+
+    want = rows(_page_path_mentions(spark, pages, rmap, cands,
+                                    alias_join_keys(cands).limit(0)))
 
     # tiny hot_k so the tail path carries real weight
     head, tail = split_alias_dictionary(cands, hot_k=3, max_tail_tokens=6)
-    head_bc = collect_alias_broadcast(spark, head.select("alias", "entity"))
-    got_rows = detect_dictionary_mentions_mapside(
-        pages, head_bc, tail, lang=None, max_tail_tokens=6).collect()
+    got_rows = _page_path_mentions(spark, pages, rmap, head, tail).collect()
     got = {(r["url"], r["sent_id"], r["start"], r["end"],
             r["alias"], r["entity"]) for r in got_rows}
-    assert got == want
+    assert got == want and want
+    assert {r[4] for r in got} - {
+        r["alias"] for r in head.select("alias").collect()}, \
+        "the tail join must contribute hits"
     # tokens context rides along on both paths (link ranking needs it)
     assert all(r["tokens"] for r in got_rows)
 
@@ -246,6 +273,10 @@ def test_dictionary_strategy_auto_switch(spark, tables):
                            dictionary_auto_threshold=1_000_000)
     ctx = _build_dict_ctx(spark, tables["pages"], tables["redirects"], small)
     assert ctx["mode"] == "broadcast"
+    # broadcast = the whole dictionary in the head, a known-empty tail
+    assert ctx["tail_empty"] is True
+    assert ctx["first_tok_bc"].value == frozenset()
+    assert ctx["witness_bc"].value == frozenset()
 
     big = PipelineConfig(dictionary_strategy="auto",
                          dictionary_auto_threshold=0)
@@ -286,55 +317,119 @@ def test_capitalize_colliding_redirects_resolve_identically(spark):
 def test_mapside_first_token_prune_fallback_identical(spark, tables):
     """The in-scan candidate path (tail first-token set broadcast into the
     scan UDF: filler sentences pruned before Arrow, only candidate
-    positions explode) and the posexplode + semi-join fallback emit
-    identical mention rows."""
+    positions explode) and the posexplode + semi-join fallback (tail sets
+    over their broadcast bound) emit identical mention rows."""
     from fact_extraction_spark.operators.mentions import (
-        build_alias_candidates, collect_alias_broadcast,
-        detect_dictionary_mentions_mapside, split_alias_dictionary)
+        build_alias_candidates, split_alias_dictionary)
 
     pages = tables["pages"]
+    rmap = collect_redirect_map(spark, tables["redirects"])
     cands = build_alias_candidates(pages, tables["redirects"])
     head, tail = split_alias_dictionary(cands, hot_k=3, max_tail_tokens=6)
-    head_bc = collect_alias_broadcast(spark, head.select("alias", "entity"))
 
-    def rows(max_ft):
+    def rows(max_rows):
         return sorted(
             (r["url"], r["sent_id"], r["start"], r["end"],
              r["alias"], r["entity"], tuple(r["tokens"]))
-            for r in detect_dictionary_mentions_mapside(
-                pages, head_bc, tail, lang=None, max_tail_tokens=6,
-                max_first_tokens=max_ft).collect())
+            for r in _page_path_mentions(spark, pages, rmap, head, tail,
+                                         max_rows).collect())
 
-    pruned, fallback = rows(2_000_000), rows(0)
+    pruned, fallback = rows(None), rows(0)
     assert pruned == fallback and pruned
 
 
-def test_unanchored_mapside_prune_identical_through_pipeline(spark, tables):
-    """dictionary_prune_sentences on/off is mention-row-identical through
-    the full _page_mentions plan in the web shape that exercises every
-    branch at once: mapside strategy (hot head + n-gram tail) +
+def test_unanchored_mapside_prune_identical_through_pipeline(
+        spark, tables, monkeypatch):
+    """Pruning (tail sets broadcast) and the fallback (the broadcast bound
+    lowered to 0) are mention-row-identical through the full
+    _page_mentions plan in the web shape that exercises every branch at
+    once: mapside strategy (hot head + n-gram tail) +
     dictionary_scan_unanchored (every sentence scanned, anchors lifted) +
     ambiguity ranking riding on anchor-built profiles."""
-    from fact_extraction_spark.plans.pipeline import (
-        PipelineConfig, _build_dict_ctx, _page_mentions)
+    from fact_extraction_spark.plans import pipeline
 
     rmap = collect_redirect_map(spark, tables["redirects"])
+    cfg = pipeline.PipelineConfig(mention_mode="dictionary",
+                                  dictionary_strategy="mapside",
+                                  dictionary_scan_unanchored=True,
+                                  dictionary_hot_k=3)
     outs = []
-    for prune in (True, False):
-        cfg = PipelineConfig(mention_mode="dictionary",
-                             dictionary_strategy="mapside",
-                             dictionary_scan_unanchored=True,
-                             dictionary_hot_k=3,
-                             dictionary_prune_sentences=prune)
-        ctx = _build_dict_ctx(spark, tables["pages"], tables["redirects"],
-                              cfg)
-        assert (ctx["first_tok_bc"] is not None) == prune
-        m = _page_mentions(tables["pages"], rmap, "en", ctx, cfg)
+    for bound in (pipeline.TAIL_BROADCAST_ROWS, 0):
+        monkeypatch.setattr(pipeline, "TAIL_BROADCAST_ROWS", bound)
+        ctx = pipeline._build_dict_ctx(spark, tables["pages"],
+                                       tables["redirects"], cfg)
+        assert (ctx["first_tok_bc"] is not None) == (bound > 0)
+        m = pipeline._page_mentions(tables["pages"], rmap, "en", ctx, cfg)
         outs.append(sorted(
             (r["url"], r["sent_id"], r["start"], r["end"], r["entity"])
             for r in m.collect()))
         ctx["tail"].unpersist()
     assert outs[0] == outs[1] and outs[0]
+
+
+def test_broadcast_is_mapside_with_empty_tail(spark, tables):
+    """Both dictionary strategies build one context shape, and with
+    unanchored scanning and ambiguous aliases (ranking active) they give
+    identical _page_mentions rows: "broadcast" is the empty-tail case of
+    the map-side plan."""
+    from fact_extraction_spark.plans.pipeline import (
+        PipelineConfig, _build_dict_ctx, _page_mentions)
+
+    # a second target for an alias the pages mention ("Veldt Haven")
+    redirects = tables["redirects"].unionByName(spark.createDataFrame(
+        [("Veldt_Haven", "Grandmere_City")], "alias string, target string"))
+    rmap = collect_redirect_map(spark, redirects)
+    ctxs, outs = {}, {}
+    for strategy in ("broadcast", "mapside"):
+        cfg = PipelineConfig(mention_mode="dictionary",
+                             dictionary_strategy=strategy,
+                             dictionary_scan_unanchored=True,
+                             dictionary_hot_k=3)
+        ctx = ctxs[strategy] = _build_dict_ctx(
+            spark, tables["pages"], redirects, cfg)
+        assert "Veldt Haven" in {
+            r["alias"] for r in ctx["ambiguous"].collect()}
+        outs[strategy] = sorted(
+            (r["url"], r["sent_id"], r["start"], r["end"], r["entity"])
+            for r in _page_mentions(tables["pages"], rmap, "en", ctx,
+                                    cfg).collect())
+    assert set(ctxs["broadcast"]) == set(ctxs["mapside"])
+    assert ctxs["broadcast"]["tail_empty"]
+    assert not ctxs["mapside"]["tail_empty"]
+    assert outs["broadcast"] == outs["mapside"] and outs["broadcast"]
+    for ctx in ctxs.values():
+        ctx["tail"].unpersist()
+
+
+def test_dict_ctx_memo_evicts_oldest(spark):
+    """A model holds at most four memoized dictionary contexts: a fifth
+    evicts the oldest, and asking for the evicted one rebuilds it."""
+    from fact_extraction_spark.plans.pipeline import (
+        PipelineConfig, _build_dict_ctx)
+
+    pages = spark.createDataFrame(
+        [("https://en.wikipedia.org/wiki/Alpha_City", b"x", "en")],
+        "url string, html binary, lang string")
+    redirects = spark.createDataFrame(
+        [("Old Alpha", "Alpha_City")], "alias string, target string")
+    extras: dict = {}
+
+    def build(hot_k):
+        cfg = PipelineConfig(mention_mode="dictionary",
+                             dictionary_strategy="broadcast",
+                             dictionary_hot_k=hot_k)
+        return _build_dict_ctx(spark, pages, redirects, cfg, extras=extras)
+
+    first = build(1)
+    assert build(1) is first                  # memo hit
+    for hot_k in (2, 3, 4, 5):
+        build(hot_k)
+    memo = [k for k in extras if k[0] == "dict_ctx"]
+    assert len(memo) == 4
+    assert [k[3] for k in memo] == [2, 3, 4, 5]  # hot_k 1 evicted first
+    again = build(1)
+    assert again is not first                 # rebuilt, not served stale
+    assert [k[3] for k in extras if k[0] == "dict_ctx"] == [3, 4, 5, 1]
 
 
 def test_scan_skip_set_fast_path_is_exact():
@@ -520,33 +615,20 @@ def _para_fastpath_pages(spark):
 
 
 def test_paragraph_fastpath_rows_identical(spark):
-    """fused_sentence_hits / fused_sentence_hits_and_anchors with pruning
-    (probes + paragraph skip active) emit exactly the pruned projection of
-    the prune=False rows — same sent_ids, rel_pos, tokens, hits, anchor
-    spans and cand positions — on the corpus of _para_fastpath_pages."""
+    """The page scan UDF with an empty tail (pruning, witness gate, probes
+    and paragraph skip active) emits exactly the pruned projection of the
+    run with no tail sets (unpruned and ungated) — same sent_ids, rel_pos,
+    tokens, hits, anchor spans and cand positions — on the corpus of
+    _para_fastpath_pages."""
     from fact_extraction_spark.operators.mentions import (
-        fused_sentence_hits, fused_sentence_hits_and_anchors)
+        empty_tail_broadcasts, fused_sentence_hits_and_anchors)
 
     pages = _para_fastpath_pages(spark)
     aliases = [("Alpha City", "Alpha_City"),
                ("The Grand City", "The_Grand_City")]
     head_bc = spark.sparkContext.broadcast(aliases)
     rmap_bc = spark.sparkContext.broadcast({})
-
-    def key(r):
-        return (r["url"], r["sent_id"], r["rel_pos"], tuple(r["tokens"]),
-                tuple(map(tuple, r["hits"])), tuple(r["cand"]))
-
-    pruned = sorted(
-        key(r) for r in fused_sentence_hits(
-            pages, head_bc, lang=None, include_unanchored=True,
-            prune_empty=True, no_tail=True).collect())
-    full = sorted(
-        key(r) for r in fused_sentence_hits(
-            pages, head_bc, lang=None, include_unanchored=True,
-            prune_empty=False, no_tail=True).collect()
-        if r["hits"] or r["cand"])
-    assert pruned == full and pruned
+    ft_bc, wit_bc, _ = empty_tail_broadcasts(spark)
 
     def key2(r):
         return (r["url"], r["sent_id"], r["rel_pos"], tuple(r["tokens"]),
@@ -556,11 +638,11 @@ def test_paragraph_fastpath_rows_identical(spark):
     pruned2 = sorted(
         key2(r) for r in fused_sentence_hits_and_anchors(
             pages, head_bc, rmap_bc, lang=None, include_unanchored=True,
-            prune_empty=True, no_tail=True).collect())
+            first_tok_bc=ft_bc, witness_bc=wit_bc).collect())
     full2 = sorted(
         key2(r) for r in fused_sentence_hits_and_anchors(
-            pages, head_bc, rmap_bc, lang=None, include_unanchored=True,
-            prune_empty=False, no_tail=True).collect()
+            pages, head_bc, rmap_bc, lang=None,
+            include_unanchored=True).collect()
         if r["hits"] or r["amentions"] or r["cand"])
     assert pruned2 == full2 and pruned2
     # the fast path must actually have something to skip AND something to
